@@ -117,9 +117,11 @@ object ConnectedComponents {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       // min member per component (roots chosen min-ward above, but a
-      // late union can re-root: recompute the min explicitly)
+      // late union can re-root: recompute the min explicitly). Keys are
+      // materialized first: `find` path-compresses into `parent`, and a
+      // HashMap must not be written while its keys are being iterated
       val minOf = scala.collection.mutable.HashMap[String, String]()
-      parent.keys.foreach { m =>
+      parent.keysIterator.toArray.foreach { m =>
         val r = find(m)
         val cur = minOf.getOrElse(r, m)
         minOf(r) = if (m < cur) m else cur

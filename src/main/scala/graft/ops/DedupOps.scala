@@ -143,15 +143,17 @@ object DedupOps {
     val hotNg = dfs.filter(col("df") > maxDf).select(col("ng"))
     val hotArr = sh.join(hotNg, "ng")
       .groupBy(col("doc")).agg(collect_set(col("ng")).as("hots"))
+    // a doc without hot shingles has no hotArr row: a typed empty array
+    // keeps the intersection size 0 (size(null) is -1 with ANSI off)
+    def noHots(c: Column): Column = coalesce(c, typedLit(Array.empty[String]))
     pairCounts
       .join(n.as("n1t"), col("d1") === col("n1t.doc"))
       .join(n.as("n2t"), col("d2") === col("n2t.doc"))
       .join(hotArr.as("h1"), col("d1") === col("h1.doc"), "left")
       .join(hotArr.as("h2"), col("d2") === col("h2.doc"), "left")
       .select(col("d1"), col("d2"),
-        (col("c_cut") + coalesce(
-          size(array_intersect(col("h1.hots"), col("h2.hots")))
-            .cast("long"), lit(0L))).as("c"),
+        (col("c_cut") + size(array_intersect(noHots(col("h1.hots")),
+          noHots(col("h2.hots")))).cast("long")).as("c"),
         col("n1t.n").as("n1"), col("n2t.n").as("n2"))
       .select(col("d1"), col("d2"),
         (col("c").cast("double") /

@@ -8,13 +8,15 @@ import org.apache.spark.sql.functions._
   * matching the north-star's "partitioned Iceberg graph tables
   * bucketed by canonical-entity hash".
   *
-  * Layout: `path/data/pred=<p>/bucket=<b>/` parquet files
+  * Layout: `path/data/snap=<id>/pred=<p>/bucket=<b>/` parquet files
   *  - partition column `pred`: per-predicate partition PRUNING — a
   *    query over `calls` edges never touches `documented_as` files
   *    (asserted in PlanSpec);
   *  - `bucket` = hash(subj) % nBuckets: co-locates each canonical
   *    entity's out-edges, so entity-keyed reads touch one bucket and
   *    same-bucket joins between graph tables can skip the shuffle;
+  *  - ONE file per (pred, bucket) dir of a snapshot ([[writeLayout]]):
+  *    at graph-table sizes the write cost is bound by file count;
   *  - `path/manifest`: one row per snapshot with row counts + content
   *    hash — the read side can verify integrity and pick a snapshot.
   */
@@ -126,6 +128,17 @@ object GraphTables {
   private def hasPartitions(spark: SparkSession, dir: String): Boolean =
     Fs.hasPartitions(spark, dir, "pred=")
 
+  /** THE layout write of [[write]], [[writeDelta]], [[compactSnapshot]]:
+    * rows hash-clustered on (pred, bucket) give each partition dir ONE
+    * file (else every task writes one into every dir it has rows for);
+    * STATIC overwrite drops stale partitions whatever the session conf. */
+  private def writeLayout(rows: DataFrame, dir: String): Unit =
+    rows.withColumn("bucket", bucketCol(col("subj")))
+      .repartition(col("pred"), col("bucket"))
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "static")
+      .partitionBy("pred", "bucket").parquet(dir)
+
   /** Publish one snapshot into its OWN directory, THEN append the
     * manifest row. The previous snapshot's data is never touched, so a
     * crash between the data write and the manifest append leaves
@@ -139,14 +152,7 @@ object GraphTables {
   def write(triples: DataFrame, path: String,
       snapshotId: String): (Long, String) = {
     val spark = triples.sparkSession
-    val withB = triples.withColumn("bucket", bucketCol(col("subj")))
-    // explicit STATIC overwrite of THIS snapshot's dir: a republish of
-    // the same snapshotId replaces it wholesale, including (pred,
-    // bucket) partitions absent from the new data — immune to any
-    // dynamic-overwrite session conf set elsewhere
-    withB.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("pred", "bucket").parquet(snapDir(path, snapshotId))
+    writeLayout(triples, snapDir(path, snapshotId))
     // fingerprint the data ACTUALLY WRITTEN (read back from disk), not
     // a recomputation of the input plan — recomputing would run the
     // whole upstream pipeline a second time and hash rows that were
@@ -317,10 +323,7 @@ object GraphTables {
     // data FIRST (static Overwrite wipes the dir, sidecar included —
     // a republish of the same snapshotId replaces the overlay
     // wholesale), sidecar second, manifest row last
-    added.withColumn("bucket", bucketCol(col("subj")))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "static")
-      .partitionBy("pred", "bucket").parquet(dir)
+    writeLayout(added, dir)
     val (addN, addH) =
       if (!hasPartitions(spark, dir)) (0L, 0L)
       else ContentHash.xorLong(spark.read.parquet(dir),
@@ -367,12 +370,9 @@ object GraphTables {
       snapshotId: String): Boolean = {
     val dir = snapDir(path, snapshotId)
     if (!Fs.exists(spark, baseMetaDir(dir))) return false
+    // static overwrite: a crashed compaction's leftovers never survive
     val tmp = s"${dir}__compact"
-    readSnapshot(spark, path, snapshotId)
-      .select(col("subj"), col("obj"), col("docId"), col("score"),
-        col("pred"), col("bucket"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("pred", "bucket").parquet(tmp)
+    writeLayout(readSnapshot(spark, path, snapshotId), tmp)
     Fs.swapInto(spark, tmp, dir)
     true
   }

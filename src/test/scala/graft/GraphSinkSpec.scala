@@ -73,6 +73,89 @@ class GraphSinkSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
   }
 
+  test("compaction under a leaked dynamic-overwrite conf drops a crashed run's stale partitions") {
+    import spark.implicits._
+    import graft.sources.ContentHash
+    val tmp = Files.createTempDirectory("graphcompactdyn").toString
+    val HashCols = Seq("subj", "pred", "obj", "docId")
+    def rows(ts: (String, String, String)*) =
+      ts.map { case (s, o, d) => (s, "calls", o, d, 1.0) }
+        .toDF("subj", "pred", "obj", "docId", "score")
+    val base = rows(("a", "x", "d1"), ("b", "y", "d2"))
+    GraphTables.write(base, tmp, "cd-A")
+    val (rN, rH) = ContentHash.xorLong(
+      base.filter(col("docId") === "d2"), HashCols)
+    GraphTables.writeDelta(spark, tmp, "cd-B", "cd-A",
+      rows(("b", "z", "d2")), Seq("d2").toDF("docId"), rN, rH)
+    def resolved() = GraphTables.readSnapshot(spark, tmp, "cd-B")
+      .select("subj", "pred", "obj", "docId").collect().map(_.toSeq).toSet
+    val want = resolved()
+    val wantHash = ContentHash.hex(
+      GraphTables.readSnapshot(spark, tmp, "cd-B"), HashCols)
+    // a crashed earlier compaction left a partition the new data lacks
+    rows(("s", "t", "d9")).withColumn("pred", lit("stale"))
+      .withColumn("bucket", lit(0))
+      .write.partitionBy("pred", "bucket")
+      .parquet(s"$tmp/data/snap=cd-B__compact")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try {
+      assert(GraphTables.compactSnapshot(spark, tmp, "cd-B"))
+      assert(GraphTables.baseOf(spark, tmp, "cd-B").isEmpty)
+      assert(resolved() == want, s"stale rows swapped in: ${resolved() -- want}")
+      assert(ContentHash.hex(GraphTables.readSnapshot(spark, tmp, "cd-B"),
+        HashCols) == wantHash)
+    } finally spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+  }
+
+  test("every layout write leaves ONE parquet file per (pred, bucket) dir, same fingerprint under any conf") {
+    import spark.implicits._
+    import graft.sources.ContentHash
+    val tmp = Files.createTempDirectory("graphlayout").toString
+    // materialized once: only the publish varies with the confs below
+    val triples = Pipeline.run(spark, 100).triples.localCheckpoint()
+    // parquet files per pred=/bucket= dir of one snapshot
+    def filesPerDir(id: String): Map[String, Int] = {
+      val snap = new java.io.File(s"$tmp/data/snap=$id")
+      (for {
+        p <- snap.listFiles().toSeq if p.getName.startsWith("pred=")
+        b <- p.listFiles().toSeq if b.getName.startsWith("bucket=")
+      } yield s"${p.getName}/${b.getName}" ->
+        b.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    }
+    def assertOneFilePerDir(id: String, minDirs: Int): Unit = {
+      val f = filesPerDir(id)
+      assert(f.size >= minDirs, s"$id: only ${f.size} partition dirs")
+      assert(f.values.forall(_ == 1), s"$id: ${f.filter(_._2 != 1)}")
+    }
+    val full = GraphTables.write(triples, tmp, "lay-A")
+    assertOneFilePerDir("lay-A", GraphTables.NumBuckets)
+    // overlay: re-emit a third of the docs, hiding their base rows
+    val docs = triples.select("docId").distinct().orderBy("docId")
+      .as[String].collect()
+    val redo = docs.take(docs.length / 3).toSeq
+    val (rN, rH) = ContentHash.xorLong(
+      triples.filter(col("docId").isin(redo: _*)),
+      Seq("subj", "pred", "obj", "docId"))
+    GraphTables.writeDelta(spark, tmp, "lay-B", "lay-A",
+      triples.filter(col("docId").isin(redo: _*)), redo.toDF("docId"), rN, rH)
+    assertOneFilePerDir("lay-B", 2)
+    assert(GraphTables.compactSnapshot(spark, tmp, "lay-B"))
+    assertOneFilePerDir("lay-B", GraphTables.NumBuckets)
+    assert(filesPerDir("lay-B").keySet == filesPerDir("lay-A").keySet)
+    // the same publish under non-default confs: same layout, same answer
+    Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1",
+      "spark.sql.shuffle.partitions" -> "7").zipWithIndex.foreach {
+      case ((k, v), i) =>
+        val prev = spark.conf.get(k)
+        spark.conf.set(k, v)
+        try {
+          assert(GraphTables.write(triples, tmp, s"lay-c$i") == full, s"$k=$v")
+          assertOneFilePerDir(s"lay-c$i", GraphTables.NumBuckets)
+        } finally spark.conf.set(k, prev)
+    }
+  }
+
   test("publishing an EMPTY triple set commits rowCount=0 and stays readable") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graphempty").toString

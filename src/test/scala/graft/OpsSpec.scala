@@ -55,6 +55,39 @@ class OpsSpec extends SparkSpec {
     sh.unpersist()
   }
 
+  test("jaccardPairs with a df cut gives the exact pairs with ANSI on and off") {
+    import spark.implicits._
+    val hot = "license header boilerplate"
+    val d = ((0 until 100).map(i =>
+      (i.toLong, s"$hot unique$i word$i token$i extra$i more$i")) ++ Seq(
+      (1000L, s"$hot unique1 word1 token1 extra1 more1"),
+      // a near-dup pair with NO hot shingle: no hot-side join row
+      (2000L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2001L, "alpha beta gamma delta epsilon zeta eta theta iota lambda")))
+      .toDF("doc_id", "text")
+    // exact oracle: a candidate shares a shingle of df in [2, maxDf];
+    // jaccard is verified over the FULL shingle sets
+    val sets = DedupOps.shingles(d, "doc_id", "text").collect()
+      .groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getString(1)).toSet }
+    val df = sets.values.toSeq.flatten.groupBy(identity).map { case (g, v) => g -> v.size }
+    val want = (for {
+      (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq if a < b
+      c = sa.intersect(sb)
+      if c.exists(g => df(g) >= 2 && df(g) <= 50)
+      j = c.size.toDouble / (sa.size + sb.size - c.size).toDouble
+      if j >= 0.7
+    } yield (a, b, j)).toSet
+    assert(want.map(t => (t._1, t._2)) == Set((1L, 1000L), (2000L, 2001L)))
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set(key, ansi)
+      val got = DedupOps.jaccardPairs(d, "doc_id", "text", 0.7, 50).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == want, s"ansi=$ansi")
+    } finally spark.conf.set(key, prev)
+  }
+
   test("exact dedup groups partition the corpus") {
     val total = docs.count()
     val sum = DedupOps.exactGroups(docs, "doc_id", "text")
